@@ -95,105 +95,89 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
 def transitive_closure_pairs(edges: DataFrame, src: str = "src",
                              dst: str = "dst",
                              max_iter: int = 32) -> DataFrame:
-    """Set-semantics closure — (src, dst) only, no hop distance: the
-    ``pred+`` lowering for path queries (paths.py), which discard
-    distance anyway. Same path-doubling round structure as
-    transitive_closure but the per-round merge is a 2-column DISTINCT
-    instead of a 3-column min-aggregate — less shuffle data and a
-    cheaper aggregate per round."""
+    """Set-semantics closure — (src, dst) only: the ``pred+`` lowering
+    for path queries (paths.py), which discard distance anyway. The
+    rounds still carry dist: the stopping certificate needs it."""
     return transitive_closure(edges, src=src, dst=dst,
-                              max_iter=max_iter, with_distance=False)
+                              max_iter=max_iter).select("src", "dst")
 
 
 def transitive_closure(edges: DataFrame, src: str = "src",
-                       dst: str = "dst", max_iter: int = 32,
-                       with_distance: bool = True) -> DataFrame:
+                       dst: str = "dst", max_iter: int = 32) -> DataFrame:
     """Directed transitive closure with shortest hop distance — the
     relational property-path ``pred+`` operator: (src, dst, dist) for
-    every reachable pair. Path-doubling iteration (paths ∘ paths, min
-    merge, localCheckpoint lineage truncation): O(log diameter) rounds
-    — and driver round-trips — instead of O(diameter); per-round cost is
-    a closure self-join, which beats edge-at-a-time for long thin graphs
-    and is bounded by the final closure size either way. Cycles are
-    safe: a pair's shortest-hop distance is present from the round the
-    pair first appears (both halves of the shortest path exist
-    inductively), so the count fixpoint is also the distance fixpoint.
+    every reachable pair, duplicate-free.
 
-    ``with_distance=False`` drops the dist column and merges with a
-    plain DISTINCT (set semantics — see transitive_closure_pairs).
+    Path doubling: P0 is the distinct edge set (dist 1) and round k
+    merges P(k-1) with P(k-1) ∘ P(k-1) under min(dist). By induction
+    P(k) holds exactly the pairs whose shortest path has at most
+    L = 2^k hops, each with its shortest distance (split a shortest
+    path into halves of at most 2^(k-1) hops; both halves are shortest
+    paths, so both are in P(k-1) with their true distances). Cycles
+    are safe: every pair in P(k) has its true distance.
+
+    Max-hop certificate: stop after round k when max(dist) < L. If any
+    pair's shortest path were longer than L, its first L hops would
+    form a pair whose shortest distance is exactly L (subpaths of
+    shortest paths are shortest), and that pair is in P(k) — so
+    max(dist) = L. A 7-hop chain therefore stops after 3 rounds
+    (L = 8) and an 8-hop chain after 4. The max is read by the one
+    action that materializes each round's cache, so a round costs one
+    job and there is neither an up-front count nor a confirming round.
+    ``max_iter`` bounds the rounds (32 rounds cover 2^32 hops).
+
+    Round partitions: ``sparkContext.defaultParallelism`` (the cluster's
+    cores, the derivation _bucket_write_partitions uses), not
+    ``spark.sql.shuffle.partitions``: the rounds move little data, so
+    on a small cluster a 32-way shuffle pays for tasks, not rows. The
+    count stays explicit so each cached round keeps its hash
+    partitioning on src: an InMemoryRelation preserves its output
+    partitioning through Catalyst (a checkpoint's LogicalRDD does not),
+    so the next round's b-side join input (keyed on src) and the
+    merge's groupBy clustering (src ⊆ {src, dst}) need no exchange.
 
     Round caches are built once and dropped next round, so columnar
     cache COMPRESSION is pure overhead for them — it is disabled for
     the duration of the loop and restored after (r6, measured ~1 s at
     sf1; representation-only, no semantic effect).
 
-    Rounds persist src-partitioned CACHED DataFrames instead of
-    localCheckpoints: an InMemoryRelation PRESERVES its output
-    partitioning through Catalyst (a checkpoint's LogicalRDD does not),
-    so each round's b-side join input (keyed on src) and the merge's
-    groupBy clustering (src ⊆ {src, dst}) are satisfied for free —
-    two exchanges per round instead of three, and the fixpoint count()
-    doubles as the cache-materializing action (measured ~35% faster at
-    sf0.1; BENCH/BASELINE.md §6)."""
+    The returned frame is the last round's cache: the caller owns it
+    and may ``unpersist()`` it once done."""
     spark = edges.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    nparts = spark.sparkContext.defaultParallelism
     _COMPRESS = "spark.sql.inMemoryColumnarStorage.compressed"
     prev_compress = spark.conf.get(_COMPRESS, "true")
 
-    def _round(paths, n, i, with_dist):
-        if with_dist:
-            comp = (paths.alias("a").join(
-                        paths.alias("b"),
-                        F.col("a.dst") == F.col("b.src"))
+    # truncate the upstream lineage ONCE (the input may be a heavy
+    # extraction pipeline — without this, every round's cached plan
+    # embeds it and driver-side planning swamps the saved exchange).
+    # eager=False (r6): the checkpoint materializes inside round 1's
+    # job instead of as its own full pass over the edges.
+    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+         .localCheckpoint(eager=False))
+    spark.conf.set(_COMPRESS, "false")  # round caches: see docstring
+    try:
+        # P0 is materialized by round 1's job, as part of its self-join
+        paths = (e.repartition(nparts, "src").dropDuplicates(["src", "dst"])
+                 .withColumn("dist", F.lit(1)).persist())
+        for i in range(max_iter):
+            comp = (paths.alias("a")
+                    .join(paths.alias("b"), F.col("a.dst") == F.col("b.src"))
                     .select(F.col("a.src").alias("src"),
                             F.col("b.dst").alias("dst"),
                             (F.col("a.dist") + F.col("b.dist"))
                             .alias("dist")))
             merged = (paths.unionByName(comp)
                       .repartition(nparts, "src")
-                      .groupBy("src", "dst").agg(F.min("dist")
-                                                 .alias("dist")))
-        else:
-            comp = (paths.alias("a").join(
-                        paths.alias("b"),
-                        F.col("a.dst") == F.col("b.src"))
-                    .select(F.col("a.src").alias("src"),
-                            F.col("b.dst").alias("dst")))
-            merged = (paths.unionByName(comp)
-                      .repartition(nparts, "src").distinct())
-        name = ("transitive_closure" if with_dist
-                else "transitive_closure_pairs")
-        _capture_iteration_plan(name, i, merged)
-        merged = merged.persist()
-        m = merged.count()
-        return merged, m
-
-    # truncate the upstream lineage ONCE (the input may be a heavy
-    # extraction pipeline — without this, every round's cached plan
-    # embeds it and driver-side planning swamps the saved exchange),
-    # then cache rounds with persist() so partitioning survives.
-    # eager=False (r6): the checkpoint materializes INSIDE the first
-    # paths job instead of as its own full pass over the edges.
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .localCheckpoint(eager=False))
-    if with_distance:
-        e = e.withColumn("dist", F.lit(1))
-    spark.conf.set(_COMPRESS, "false")  # round caches: see docstring
-    try:
-        paths = (e.repartition(nparts, "src")
-                 .dropDuplicates(["src", "dst"]).persist())
-        n = paths.count()
-        # path doubling: composing paths with paths covers depth 2^k
-        # after k rounds — O(log diameter) iterations (and driver
-        # round-trips) instead of O(diameter); per-round cost is a
-        # closure self-join, bounded by the final closure size either way
-        for i in range(max_iter):
-            merged, m = _round(paths, n, i, with_distance)
-            if m == n:
-                merged.unpersist(False)
-                break
+                      .groupBy("src", "dst")
+                      .agg(F.min("dist").alias("dist")))
+            _capture_iteration_plan("transitive_closure", i, merged)
+            merged = merged.persist()
+            longest = merged.agg(F.max("dist")).first()[0]
             paths.unpersist(False)
-            paths, n = merged, m
+            paths = merged
+            if longest is None or longest < 2 ** (i + 1):
+                break
     finally:
         spark.conf.set(_COMPRESS, prev_compress)
     return paths

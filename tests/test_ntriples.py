@@ -15,6 +15,7 @@ from rdf_go_spark.encoders import encode_nquads, encode_ntriples
 from rdf_go_spark.parsers.ntriples import (
     parse_document, parse_nquads_line, parse_ntriples_line,
 )
+from tests.w3c_harness import case_id
 
 W3C = "/root/reference/w3c-tests"
 
@@ -29,7 +30,7 @@ c14n_pairs = [
 
 @pytest.mark.skipif(not nt_files, reason="W3C fixtures unavailable")
 class TestW3CNTriples:
-    @pytest.mark.parametrize("path", nt_files, ids=os.path.basename)
+    @pytest.mark.parametrize("path", nt_files, ids=case_id)
     def test_syntax(self, path):
         src = open(path, encoding="utf-8").read()
         stmts, errs = parse_document(src)
@@ -39,7 +40,7 @@ class TestW3CNTriples:
             assert not errs, f"positive case failed: {errs[0]}"
 
     @pytest.mark.parametrize("inp,exp", c14n_pairs,
-                             ids=lambda p: os.path.basename(p))
+                             ids=case_id)
     def test_c14n_byte_parity(self, inp, exp):
         stmts, errs = parse_document(open(inp, encoding="utf-8").read())
         assert not errs
@@ -48,7 +49,7 @@ class TestW3CNTriples:
 
 @pytest.mark.skipif(not nq_files, reason="W3C fixtures unavailable")
 class TestW3CNQuads:
-    @pytest.mark.parametrize("path", nq_files, ids=os.path.basename)
+    @pytest.mark.parametrize("path", nq_files, ids=case_id)
     def test_syntax(self, path):
         src = open(path, encoding="utf-8").read()
         stmts, errs = parse_document(src, quads=True)
@@ -106,7 +107,7 @@ nq_c14n_pairs = [
 
 @pytest.mark.skipif(not nq_c14n_pairs, reason="W3C fixtures unavailable")
 @pytest.mark.parametrize("inp,exp", nq_c14n_pairs,
-                         ids=lambda p: os.path.basename(p))
+                         ids=case_id)
 def test_nq_c14n_byte_parity(inp, exp):
     stmts, errs = parse_document(
         open(inp, encoding="utf-8", newline="").read(), quads=True)

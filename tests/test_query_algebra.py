@@ -33,10 +33,10 @@ def tiny(spark):
     return spark.createDataFrame(_EDGES, ["subj", "pred", "obj"])
 
 
-def _tiny_cte() -> str:
+def _tiny_cte(edges=_EDGES) -> str:
     rows = ", ".join(
         "(" + ", ".join("'" + t.replace("'", "''") + "'" for t in e) + ")"
-        for e in _EDGES)
+        for e in edges)
     return f"SELECT * FROM (VALUES {rows}) t(subj, pred, obj)"
 
 
@@ -101,6 +101,28 @@ class TestPathPairs:
         got = _pairs(path_pairs(tiny, "<p>|<q>"))
         assert ("<a>", "<b>") in got and ("<a>", "<d>") in got
         assert len(got) == 5
+
+    def test_repeated_iri_alt_keeps_bag_cardinality(self, spark):
+        """(<a>|<a>) derives each <a> triple twice (§18.4 bag union):
+        the single pred-IN scan is only taken for distinct IRIs."""
+        edges = [("<x>", "<a>", "<y>"), ("<y>", "<a>", "<z>"),
+                 ("<x>", "<b>", "<z>")]
+        df = spark.createDataFrame(edges, ["subj", "pred", "obj"])
+        for expr in ("(<a>|<a>)", "(<a>|<b>)|<a>", "<a>|<b>"):
+            got = sorted(tuple(r) for r in path_pairs(df, expr).collect())
+            want = sorted(
+                duckdb.sql(path_sql(expr, _tiny_cte(edges))).fetchall())
+            assert got == want, expr
+        assert len(path_pairs(df, "(<a>|<a>)").collect()) == 4
+
+    def test_distinct_iri_alt_is_one_scan(self, tiny):
+        from rdf_go_spark.plans.pipeline import _PATH_EXPR
+        # the pipeline path's trailing (mentions|tool) alternation
+        alt = "(" + _PATH_EXPR.split("/(", 1)[1]
+        for expr in ("<p>|<q>", alt):
+            plan = (path_pairs(tiny, expr)._jdf.queryExecution()
+                    .optimizedPlan().toString())
+            assert "Union" not in plan, expr
 
     def test_plus_on_cycle_terminates_and_is_complete(self, tiny):
         got = _pairs(path_pairs(tiny, "<p>+"))

@@ -13,6 +13,7 @@ from hypothesis import given, settings, strategies as st
 from rdf_go_spark.parsers.turtle import parse_turtle
 from rdf_go_spark.rdfc10 import canonicalize
 from rdf_go_spark.terms import BlankNode, IRI, Literal, Quad
+from tests.w3c_harness import case_id
 
 
 def _permute_labels(quads, seed):
@@ -89,7 +90,7 @@ w3c_bnode_ttls = [p for p in sorted(
 
 
 @pytest.mark.skipif(not w3c_bnode_ttls, reason="fixtures unavailable")
-@pytest.mark.parametrize("path", w3c_bnode_ttls, ids=os.path.basename)
+@pytest.mark.parametrize("path", w3c_bnode_ttls, ids=case_id)
 def test_w3c_permutation_invariance(path):
     src = open(path, encoding="utf-8", newline="").read()
     g, errs = parse_turtle(src, base="http://example/base/")

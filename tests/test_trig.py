@@ -5,7 +5,7 @@ import os
 import pytest
 
 from rdf_go_spark.parsers.trig import parse_trig
-from tests.w3c_harness import check_case, collect, is_legacy
+from tests.w3c_harness import case_id, check_case, collect, is_legacy
 
 CASES = (collect("trig", ".trig") + collect("trig/eval", ".trig")
          + collect("trig/syntax", ".trig"))
@@ -21,8 +21,7 @@ def _parse_cg(src, base):
 
 
 @pytest.mark.skipif(not CASES, reason="W3C fixtures unavailable")
-@pytest.mark.parametrize("path", CASES, ids=lambda p: os.path.relpath(
-    p, "/root/reference/w3c-tests"))
+@pytest.mark.parametrize("path", CASES, ids=case_id)
 def test_w3c_trig(path):
     parse = _parse_cg if is_legacy(os.path.basename(path)) else _parse
     failure = check_case(path, parse, expected_ext=".nq", expected_quads=True)
