@@ -52,41 +52,27 @@ def main() -> None:
     spark = SparkSession.builder.appName("rdf_go_spark_pipeline").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    from rdf_go_spark.operators.extraction import extract_triples
     from rdf_go_spark.operators import graph
-    from rdf_go_spark.sources.transcripts import (
-        synth_entities, synth_transcripts,
-    )
-
-    if args.update:
-        # graph-maintenance mode: read the committed store, apply the
-        # SPARQL UPDATE, checksum-diff-rewrite only changed partitions
-        from rdf_go_spark.operators import graph
-        from rdf_go_spark.operators.sparql import sparql_update
-
-        t0 = time.perf_counter()
-        g = graph.read_graph(spark, args.output).drop("part_id")
-        updated = sparql_update(g, args.update)
-        summary = graph.incremental_update(updated, args.output,
-                                           n_partitions=args.partitions)
-        summary["n_unchanged_partitions"] = len(summary.pop("unchanged"))
-        summary["n_removed_partitions"] = len(summary.pop("removed"))
-        summary["seconds"] = round(time.perf_counter() - t0, 2)
-        summary["n_written_partitions"] = len(summary.pop("written"))
-        print(json.dumps(summary))
-        spark.stop()
-        return
-
-    if args.input.startswith("synth:"):
-        transcripts = synth_transcripts(spark, int(args.input[6:]))
-    else:
-        transcripts = spark.read.parquet(args.input)
-    entities = synth_entities(spark)
 
     t0 = time.perf_counter()
-    triples = extract_triples(transcripts, entities,
-                              include_payload=not args.no_payload)
-    if args.incremental:
+    if args.update:
+        # graph-maintenance mode: apply the SPARQL UPDATE to the committed
+        # store, then checksum-diff-rewrite only changed partitions
+        from rdf_go_spark.operators.sparql import sparql_update
+        triples = sparql_update(
+            graph.read_graph(spark, args.output).drop("part_id"), args.update)
+    else:
+        from rdf_go_spark.operators.extraction import extract_triples
+        from rdf_go_spark.sources.transcripts import (
+            synth_entities, synth_transcripts,
+        )
+        if args.input.startswith("synth:"):
+            transcripts = synth_transcripts(spark, int(args.input[6:]))
+        else:
+            transcripts = spark.read.parquet(args.input)
+        triples = extract_triples(transcripts, synth_entities(spark),
+                                  include_payload=not args.no_payload)
+    if args.update or args.incremental:
         summary = graph.incremental_update(triples, args.output,
                                            n_partitions=args.partitions)
         summary["n_unchanged_partitions"] = len(summary.pop("unchanged"))
@@ -96,8 +82,7 @@ def main() -> None:
         summary = graph.materialize(triples, args.output,
                                     n_partitions=args.partitions)
         summary["n_skipped_partitions"] = len(summary.pop("skipped"))
-    dt = time.perf_counter() - t0
-    summary["seconds"] = round(dt, 2)
+    summary["seconds"] = round(time.perf_counter() - t0, 2)
     summary["n_written_partitions"] = len(summary.pop("written"))
 
     if args.query:

@@ -3,6 +3,10 @@ resume after simulated crash (north-rule checkpoint requirement)."""
 
 from __future__ import annotations
 
+import os
+import time
+import zlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,29 +28,72 @@ class TestMaterialize:
         back = graph.read_graph(spark, root)
         assert back.count() == triples.count()
         # lineage metrics agree with the data
-        m = {r.part_id: r.n_rows
-             for r in graph.metrics_table(spark, root).collect()}
+        metrics = graph.metrics_table(spark, root)
+        assert set(metrics.columns) == {
+            "part_id", "n_rows", "content_checksum", "committed_at"}
+        m = {r.part_id: r.n_rows for r in metrics.collect()}
         actual = {r.part_id: r.cnt for r in
                   back.groupBy("part_id").agg(F.count("*").alias("cnt")).collect()}
         assert m == actual
+        # each committed checksum is the crc32 sum over the partition's
+        # rows as read back (concat_ws skips NULL fields)
+        crc = {}
+        for r in back.select("part_id", "subj", "pred", "obj").collect():
+            text = "\x01".join(v for v in (r.subj, r.pred, r.obj)
+                               if v is not None)
+            crc[r.part_id] = (crc.get(r.part_id, 0)
+                              + zlib.crc32(text.encode("utf-8")))
+        assert {r["part_id"]: r["content_checksum"]
+                for r in graph.lineage_records(root)} == crc
+
+    def test_one_file_per_partition(self, spark, triples, tmp_path):
+        """Rows are clustered on part_id before the write: a multi-split
+        input lands as one file per non-empty partition, not one per
+        split and partition."""
+        from rdf_go_spark.operators import graph
+        flat_path = str(tmp_path / "flat_in")
+        triples.repartition(4).write.parquet(flat_path)
+        root = str(tmp_path / "g1f")
+        graph.materialize(spark.read.parquet(flat_path), root, n_partitions=8)
+        files = [f for _d, _s, fs in os.walk(os.path.join(root, "data"))
+                 for f in fs if f.endswith(".parquet")]
+        assert len(files) == len(graph.lineage_records(root)) > 0
 
     def test_materialize_reads_data_in_one_job(self, spark, triples, tmp_path):
         """Metrics are observe()-fused into the write: materialize over a
-        parquet input must run exactly ONE Spark job (the write) — no
-        separate aggregation pass over the input. (The kg_triples plan
-        itself adds broadcast-build jobs, so assert on a flat input.)"""
+        parquet input scans it in exactly ONE stage — no separate
+        aggregation pass. The part_id exchange may run as its own job
+        under AQE, so the assertion is over the group's stages: exactly
+        one completed stage reads input bytes, every other one reads only
+        shuffle data. (The kg_triples plan itself adds broadcast-build
+        jobs, so assert on a flat input.)"""
         from rdf_go_spark.operators import graph
         flat_path = str(tmp_path / "flat_in")
         triples.write.parquet(flat_path)
         flat = spark.read.parquet(flat_path)
         sc = spark.sparkContext
-        sc.setJobGroup("mat_single_pass", "materialize one-job assertion")
+        sc.setJobGroup("mat_single_pass", "materialize one-scan assertion")
         try:
             graph.materialize(flat, str(tmp_path / "g1j"), n_partitions=8)
         finally:
             sc.setJobGroup(None, None)
-        ids = sc.statusTracker().getJobIdsForGroup("mat_single_pass")
-        assert len(ids) == 1, f"expected 1 job, saw {len(ids)}"
+        tracker = sc.statusTracker()
+        ids = tracker.getJobIdsForGroup("mat_single_pass")
+        assert ids
+        # the status listener is asynchronous: wait for every job end
+        # (its stage completions are delivered before it)
+        deadline = time.monotonic() + 30
+        while any(tracker.getJobInfo(j).status != "SUCCEEDED" for j in ids):
+            assert time.monotonic() < deadline, "jobs did not finish"
+            time.sleep(0.1)
+        store = sc._jsc.sc().statusStore()
+        stages = [store.lastStageAttempt(sid) for j in ids
+                  for sid in tracker.getJobInfo(j).stageIds]
+        read = {s.stageId(): s.inputBytes() for s in stages
+                if s.status().toString() == "COMPLETE"}
+        # exactly one stage scans the input; the rest read only shuffle data
+        scans = [sid for sid, n in read.items() if n > 0]
+        assert len(scans) == 1, f"input-reading stages: {read}"
 
     def test_resume_after_partial_commit(self, spark, triples, tmp_path):
         """Crash simulation: first run commits only 3 of 8 partitions;
@@ -249,7 +296,16 @@ class TestIncrementalUpdate:
             r.part_id for r in with_partition_id(
                 new.exceptAll(old), 8).select("part_id").distinct()
             .collect()}
-        s = graph.incremental_update(new, root, n_partitions=8)
+        # the per-write dynamic overwrite must not depend on, nor change,
+        # the session's partitionOverwriteMode
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "static")
+        try:
+            s = graph.incremental_update(new, root, n_partitions=8)
+            assert spark.conf.get(key).lower() == "static"
+        finally:
+            spark.conf.set(key, prev)
         assert set(s["written"]) == newparts
         assert set(s["unchanged"]) == set(range(8)) - newparts
         # table now equals a full rebuild
